@@ -124,10 +124,15 @@ def grouped_prefix_sum(
     row by row) — sum integer cents for money, exactly like the
     ``running_total`` query does.
 
+    NULL values are skipped as the window skips them: a row's sum
+    covers the non-null values so far and is NULL while the group has
+    had none. A double NaN looks like NULL once in pandas and is
+    skipped too (the window would propagate it).
+
     ``order_by`` must totally order rows WITHIN a group for a
     deterministic result (same as any running-sum window).
     """
-    from pyspark.sql.types import StructField, StructType
+    from pyspark.sql.types import BooleanType, StructField, StructType
     from pyspark.sql.window import Window as W
 
     spark = df.sparkSession
@@ -158,10 +163,9 @@ def grouped_prefix_sum(
         .orderBy("_pid")
         .rowsBetween(W.unboundedPreceding, -1)
     )
+    # NULL `_off`: no non-null value of the group in earlier partitions
     offsets = partials.select(
-        "_pid",
-        "_pgk",
-        F.coalesce(F.sum("_s").over(w_off), F.lit(0)).alias("_off"),
+        "_pid", "_pgk", F.sum("_s").over(w_off).alias("_off")
     )
 
     gcols = list(group_by)
@@ -180,11 +184,18 @@ def grouped_prefix_sum(
         def _norm_key(row):
             return tuple(None if pd.isna(x) else x for x in row)
 
+        # NULL values add 0; `seen` marks rows whose group has had a
+        # non-null value so far (the window is NULL until then). Both
+        # carry across batches.
         carry_key = None
         carry_val = 0
+        carry_seen = False
         for pdf in batches:
             pdf = pdf.copy()
-            local = pdf.groupby(gcols, sort=False, dropna=False)[value_col].cumsum()
+            keys = [pdf[c] for c in gcols]
+            vals = pdf[value_col]
+            local = vals.fillna(0).groupby(keys, sort=False, dropna=False).cumsum()
+            seen = vals.notna().groupby(keys, sort=False, dropna=False).cumsum() > 0
             if carry_key is not None and len(pdf):
                 first = _norm_key(pdf.iloc[0][gcols])
                 if first == carry_key:
@@ -198,21 +209,31 @@ def grouped_prefix_sum(
                         mask = m if mask is None else (mask & m)
                     run = (~mask).argmax() if not mask.all() else len(pdf)
                     local.iloc[:run] = local.iloc[:run] + carry_val
+                    seen.iloc[:run] = seen.iloc[:run] | carry_seen
             if len(pdf):
                 carry_key = _norm_key(pdf.iloc[-1][gcols])
                 carry_val = local.iloc[-1]
+                carry_seen = bool(seen.iloc[-1])
             pdf["_local"] = local
+            pdf["_seen"] = seen
             yield pdf
 
     schema_out = StructType(
-        list(parted.schema.fields) + [StructField("_local", vtype)]
+        list(parted.schema.fields)
+        + [StructField("_local", vtype), StructField("_seen", BooleanType())]
     )
     local = parted.mapInPandas(_cumsum, schema=schema_out)
     return (
         local.withColumn("_pgk", F.struct(*group_by))
         .join(F.broadcast(offsets), ["_pid", "_pgk"])
-        .withColumn(out_col, F.col("_local") + F.col("_off"))
-        .drop("_pid", "_pgk", "_local", "_off")
+        .withColumn(
+            out_col,
+            F.when(
+                F.col("_seen") | F.col("_off").isNotNull(),
+                F.col("_local") + F.coalesce(F.col("_off"), F.lit(0)),
+            ),
+        )
+        .drop("_pid", "_pgk", "_local", "_seen", "_off")
     )
 
 

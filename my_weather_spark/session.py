@@ -22,6 +22,19 @@ if TYPE_CHECKING:
     from my_weather_spark.sources.base import SourceAdapter
 
 
+def driver_memory() -> str:
+    """``spark.driver.memory``: ``SPARK_DRIVER_MEMORY`` when set, else
+    half of the machine's physical memory in MiB. A fixed default
+    either starves a large machine or lets the heap outgrow a small
+    one until the kernel kills the driver; half leaves room for the
+    JVM's off-heap memory and the Python workers."""
+    env = os.environ.get("SPARK_DRIVER_MEMORY")
+    if env:
+        return env
+    phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{phys_bytes // 2 >> 20}m"
+
+
 def get_spark(
     app_name: str = "my_weather_spark",
     master: str | None = None,
@@ -62,7 +75,7 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         # local mode = driver-only JVM: driver memory is THE memory knob
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "64g"))
+        .config("spark.driver.memory", driver_memory())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -18,6 +18,9 @@ Spark-native design:
   deterministic row_number, and dynamically overwrite just those
   partitions. At scale this is the standard copy-on-write upsert
   pattern (Delta/Hudi MERGE without the table format).
+* the dataset under ``path`` is the store's only state: writes keep
+  no derived metadata, and ``find()`` derives every TsInfo field from
+  a scan of the points.
 """
 
 from __future__ import annotations
@@ -156,8 +159,8 @@ class TsStore:
             df.select("series_id", "ts", "value", "ingest_time"), source
         )
         # Collapse intra-batch duplicate (series_id, ts) rows ONCE and
-        # materialize: the data write and the catalog summary both
-        # consume the survivors (each used to re-run the window).
+        # materialize: the merge path reads the survivors twice (the
+        # touched-partition list and the union).
         # Pre-deduping the batch before the merge-path union is
         # equivalent: the survivor is the max under a total order
         # (ingest_time desc, value desc), so dropping batch-local
@@ -168,11 +171,6 @@ class TsStore:
             deduped.write.partitionBy(*PARTITION_COLS).mode(
                 "overwrite"
             ).parquet(self.path)
-            # fresh=True: a sidecar found beside a store that does NOT
-            # exist is necessarily stale (the store was deleted out of
-            # band) — overwrite it with just this batch instead of
-            # merging ghost series into a brand-new store's catalog.
-            self._update_catalog(deduped, replace=False, fresh=True, source=source)
             return
 
         if overwrite_on_write:
@@ -190,15 +188,14 @@ class TsStore:
             out.write.partitionBy(*PARTITION_COLS).option(
                 "partitionOverwriteMode", "static"
             ).mode("overwrite").parquet(self.path)
-            self._update_catalog(deduped, replace=True, source=source)
             return
-        else:
-            # Merge path: only read partitions the incoming batch touches.
-            touched = deduped.select(*PARTITION_COLS).distinct()
-            existing = self._read_all().join(
-                F.broadcast(touched), PARTITION_COLS, "left_semi"
-            )
-            out = merge_dedup(deduped.unionByName(existing))
+
+        # Merge path: only read partitions the incoming batch touches.
+        touched = deduped.select(*PARTITION_COLS).distinct()
+        existing = self._read_all().join(
+            F.broadcast(touched), PARTITION_COLS, "left_semi"
+        )
+        out = merge_dedup(deduped.unionByName(existing))
 
         # Write to the final location with dynamic partition overwrite
         # (scoped per-write option, not session-global conf). The union
@@ -209,239 +206,6 @@ class TsStore:
         out.write.partitionBy(*PARTITION_COLS).option(
             "partitionOverwriteMode", "dynamic"
         ).mode("overwrite").parquet(self.path)
-        # catalog rows for the touched partitions recompute from the
-        # checkpointed post-merge content (out), not the batch alone:
-        # a replaced point's old stats must leave the sidecar too
-        self._update_catalog(out, replace=False, source=source, touched=touched)
-
-    # -- catalog sidecar ---------------------------------------------------
-    # One row per (series_id, source, date) — the exact unit the data
-    # path rewrites — holding data_period_start/end, created, modified,
-    # n_points and dt_hist (the within-partition histogram of
-    # microsecond point spacings). Maintained at store() time by
-    # RECOMPUTING the touched partitions' rows from the post-merge data
-    # (idempotent: same landed data -> same stats) and keeping every
-    # other row, so find(fast=True) answers the reference's TsInfo
-    # fields — now INCLUDING n_points and delta_t — in O(catalog rows)
-    # instead of scanning the data (at 100 TB a find() scan reads every
-    # partition). Cross-partition spacings are reconstructed at read
-    # time from consecutive rows' (max_ts, next min_ts); see find().
-    # The sidecar is hive-partitioned by ``source``, and the hot path —
-    # the merge-mode store() that a micro-batch cadence hits every
-    # cycle — rewrites ONLY the touched source's partition (dynamic
-    # partition overwrite): per-cycle catalog work is O(series-dates in
-    # that source), not O(the whole store). The rare whole-catalog
-    # rewrites (whole-series replace, fresh store, legacy-layout
-    # migration) use a static overwrite, which also clears
-    # pre-partitioning flat files. The sidecar lives BESIDE the data
-    # root, not inside it: the whole-series replace path writes the
-    # dataset with a STATIC overwrite, which truncates everything under
-    # the root — a nested sidecar would be wiped mid-update. The
-    # sidecar is derived state: a torn write is repaired by
-    # rebuild_catalog(), never by trusting it blindly; a pre-v2 sidecar
-    # (per-series grain, no stats columns) triggers the same
-    # rebuild-from-data migration.
-    @property
-    def _catalog_path(self) -> str:
-        return self.path.rstrip("/") + "_catalog"
-
-    def _catalog_exists(self) -> bool:
-        jvm = self.spark._jvm
-        conf = self.spark._jsc.hadoopConfiguration()
-        p = jvm.org.apache.hadoop.fs.Path(self._catalog_path)
-        return p.getFileSystem(conf).exists(p)
-
-    # Distinct-spacing cap per (series, source, date) sidecar row: a
-    # REGULAR series carries 1-5 distinct spacings per day; an
-    # IRREGULAR one (event streams, random timestamps) approaches one
-    # per point, which would grow the sidecar toward data size at
-    # 100 TB. Above the cap the histogram is dropped (NULL); find(fast)
-    # then recovers delta_t via the pruned exact-scan fallback (the
-    # r8 default) or reports NULL with exact_fallback=False — the
-    # reference's metadata find() reports NaN delta_t always, so the
-    # zero-read NULL remains reference-faithful.
-    DT_HIST_CAP = 1024
-
-    @classmethod
-    def _summarize(cls, df: DataFrame) -> DataFrame:
-        """Per-(series_id, source, date) sidecar rows from landed data:
-        period min/max, ingest min/max, n_points (non-null values, the
-        exact path's count("value")), n_spacings (distinct spacing
-        count) and dt_hist — the histogram of microsecond spacings
-        between consecutive ts WITHIN the partition (NULL for
-        single-point partitions and above DT_HIST_CAP). The window and
-        both aggregates key on the partition columns, so this is
-        O(batch) work aligned with the data write's own shuffle."""
-        keys = ["series_id", "source", "date"]
-        w = W.partitionBy(*keys).orderBy("ts")
-        gaps = df.select(
-            *keys,
-            "ts",
-            "value",
-            "ingest_time",
-            (F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w))).alias(
-                "_gap"
-            ),
-        )
-        stats = gaps.groupBy(*keys).agg(
-            F.min("ts").alias("data_period_start"),
-            F.max("ts").alias("data_period_end"),
-            F.min("ingest_time").alias("created"),
-            F.max("ingest_time").alias("modified"),
-            F.count("value").cast("long").alias("n_points"),
-        )
-        hist = (
-            gaps.where(F.col("_gap").isNotNull())
-            .groupBy(*keys, "_gap")
-            .agg(F.count(F.lit(1)).cast("long").alias("_n"))
-            .groupBy(*keys)
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_spacings"),
-                F.map_from_entries(
-                    F.collect_list(F.struct("_gap", "_n"))
-                ).alias("_full_hist"),
-            )
-            .select(
-                *keys,
-                "n_spacings",
-                F.when(
-                    F.col("n_spacings") <= cls.DT_HIST_CAP,
-                    F.col("_full_hist"),
-                ).alias("dt_hist"),
-            )
-        )
-        return stats.join(hist, keys, "left").withColumn(
-            "n_spacings", F.coalesce(F.col("n_spacings"), F.lit(0).cast("long"))
-        )
-
-    def _catalog_schema(self):
-        from pyspark.sql import types as T
-
-        return T.StructType(
-            [
-                T.StructField("series_id", T.StringType()),
-                T.StructField("source", T.StringType()),
-                T.StructField("date", T.DateType()),
-                T.StructField("data_period_start", T.TimestampType()),
-                T.StructField("data_period_end", T.TimestampType()),
-                T.StructField("created", T.TimestampType()),
-                T.StructField("modified", T.TimestampType()),
-                T.StructField("n_points", T.LongType()),
-                T.StructField("n_spacings", T.LongType()),
-                T.StructField(
-                    "dt_hist", T.MapType(T.LongType(), T.LongType())
-                ),
-            ]
-        )
-
-    def _catalog_is_v2(self) -> bool:
-        """True when the on-disk sidecar carries the v2 per-date stats
-        columns; a v1 sidecar (per-series grain) reads as stale and is
-        rebuilt from data (schema inference is a metadata-only read)."""
-        try:
-            names = set(
-                self.spark.read.parquet(self._catalog_path).schema.fieldNames()
-            )
-        except Exception:
-            return False
-        return {"date", "n_points", "n_spacings", "dt_hist"} <= names
-
-    def _catalog_is_partitioned(self) -> bool:
-        jvm = self.spark._jvm
-        conf = self.spark._jsc.hadoopConfiguration()
-        p = jvm.org.apache.hadoop.fs.Path(self._catalog_path)
-        fs = p.getFileSystem(conf)
-        for st in fs.listStatus(p):
-            if st.getPath().getName().startswith("source="):
-                return True
-        return False
-
-    def _write_catalog(self, df: DataFrame, dynamic: bool) -> None:
-        # the overwrite reads the files being replaced — cut lineage.
-        # repartition by source -> one task (one file) per source
-        # partition; a partition holds at most one row per series.
-        df = df.localCheckpoint(eager=True)
-        mode = "dynamic" if dynamic else "static"
-        df.repartition("source").write.partitionBy("source").option(
-            "partitionOverwriteMode", mode
-        ).mode("overwrite").parquet(self._catalog_path)
-
-    def _update_catalog(
-        self,
-        landed: DataFrame,
-        replace: bool,
-        fresh: bool = False,
-        source: str | None = None,
-        touched: DataFrame | None = None,
-    ) -> None:
-        # ``landed`` is what the data write actually landed for the
-        # partitions it rewrote: the checkpointed post-merge content of
-        # the touched (source, date) partitions on the merge path, or
-        # the deduped batch on the fresh/replace paths (where the batch
-        # IS the complete new content of its series). Recomputing the
-        # touched rows from landed data — instead of monotone-merging
-        # summaries — keeps every stat exact under point replacement
-        # (a replaced row's old ingest_time/spacing must not linger)
-        # and stays idempotent: same landed data -> same rows.
-        batch = self._summarize(landed)
-        if fresh or not self._catalog_exists():
-            # fresh store: any pre-existing sidecar describes data that
-            # was deleted out of band — replace it wholesale.
-            self._write_catalog(batch, dynamic=False)
-            return
-        if not self._catalog_is_partitioned() or not self._catalog_is_v2():
-            # one-time migration (pre-partitioning flat layout, or a
-            # v1 per-series sidecar without the stats columns): the
-            # data — already written at this point — is the complete
-            # truth, so rebuild from it; the static overwrite also
-            # clears the old-layout files.
-            self.rebuild_catalog()
-            return
-        old = self.spark.read.schema(self._catalog_schema()).parquet(
-            self._catalog_path
-        )
-        if replace:
-            # whole-series replace: the old rows of the incoming
-            # series are dropped, not merged (they vouch for data that
-            # no longer exists). Series may exist under OTHER sources
-            # too, so this path rewrites the whole catalog (static) —
-            # it mirrors the data path, which is itself a full static
-            # overwrite on replace.
-            old = old.join(
-                F.broadcast(batch.select("series_id").distinct()),
-                "series_id",
-                "left_anti",
-            )
-            self._write_catalog(old.unionByName(batch), dynamic=False)
-            return
-        # merge path (the micro-batch hot path): only the touched
-        # source's partition is read (partition-pruned by the filter —
-        # a store() batch carries exactly one literal source, passed
-        # through as a string so no job runs to discover it) and only
-        # it is rewritten (dynamic overwrite) — every other source's
-        # sidecar file stays byte-identical on disk. Within it, rows
-        # for the touched (source, date) combos are replaced by the
-        # recomputed batch rows; untouched dates' rows are kept as-is.
-        if source is not None:
-            srcs = [source]
-        else:
-            srcs = [
-                r["source"] for r in landed.select("source").distinct().collect()
-            ]
-        old_touched = old.where(F.col("source").isin(srcs))
-        if touched is None:
-            touched = landed.select(*PARTITION_COLS).distinct()
-        keep = old_touched.join(
-            F.broadcast(touched), PARTITION_COLS, "left_anti"
-        )
-        self._write_catalog(keep.unionByName(batch), dynamic=True)
-
-    def rebuild_catalog(self) -> None:
-        """Recompute the catalog sidecar from the data — the recovery
-        path for torn sidecar writes and the migration path for stores
-        created before the sidecar existed."""
-        fresh = self._summarize(self._read_all())
-        self._write_catalog(fresh, dynamic=False)
 
     # -- compaction --------------------------------------------------------
     @staticmethod
@@ -551,227 +315,44 @@ class TsStore:
         pattern: str | None = None,
         source: str | None = None,
         catalog: DataFrame | None = None,
-        fast: bool = False,
-        exact_fallback: bool = True,
     ) -> DataFrame:
         """Full per-series TsInfo derived from the store, matching the
         reference's field set (repository.py:293-301): name, point_fx,
         delta_t, olson_tz_id, data_period_start/end, created, modified
         — plus n_points as an engine extra.
 
-        ``fast=True`` answers from the catalog sidecar maintained at
-        store() time — O(catalog rows), and NO data scan (not even
-        file listing) unless an O(catalog) existence probe finds
-        series the sidecar cannot answer exactly; exactly the
-        reference's repository-metadata semantics (its data_period and
-        created/modified also come from tracked metadata, not a scan),
-        and since the v2 sidecar it returns n_points and delta_t too:
-        n_points sums the per-(source, date) counts; delta_t combines
-        the stored within-partition spacing histograms with the
-        boundary spacings reconstructed from consecutive partitions'
-        (max_ts, next min_ts) — exact whenever a series' partitions
-        don't interleave in time. If they DO interleave (the same
-        series carries time-overlapping data under two sources — the
-        concatenation order is then not the ts order), or a partition
-        overflowed DT_HIST_CAP, the sidecar alone cannot answer: with
-        ``exact_fallback=True`` (the default) fast delta_t is
-        recomputed for JUST those series by a data scan pruned to
-        their (source, date) partitions (broadcast the partition list
-        so dynamic partition pruning keeps the scan proportional to
-        the fallback subset, not the store), making fast delta_t
-        exact-equal to the scan path for every series. With
-        ``exact_fallback=False`` those series report NULL delta_t
-        with zero data reads — the reference's metadata find() puts
-        NaN there always, so NULL is reference-faithful; use it when
-        the store is dominated by irregular (capped) series and a
-        metadata-only answer is the point. The default exact path
-        scans the data.
-
-        Snapshot binding: with ``exact_fallback=True`` the returned
-        DataFrame is bound to the CATALOG STATE AT CALL TIME (the
-        catalog is checkpointed alongside the fallback existence
-        probe, so the probe's plan-shape decision and the executed
-        plan always agree) — series stored after find() returns do not
-        appear when the result is executed later. The fallback scan
-        itself reads current data files within the snapshot's
-        fallback partitions. With ``exact_fallback=False`` the result
-        is fully lazy and reflects the catalog at execution time.
-
-        delta_t (exact path) is the per-series mode of point spacing
-        (dt_mode — the store knows the actual cadence). point_fx and
-        olson_tz_id come from ``catalog`` (Domain.measurements, keyed
-        by store_id), broadcast-joined; NULL when no catalog is given.
-        Both aggregates hash-partition by series, so the join plans
-        without an extra exchange.
+        Every field comes from one scan of the stored points (filtered
+        by ``source`` and the ``pattern`` regex on series_id), so the
+        answer is always the current data: a series stored under
+        several sources merges into one row. data_period_start/end are
+        the min/max ts, created/modified the min/max ingest_time of the
+        surviving points, n_points counts non-null values, and delta_t
+        is the per-series mode of point spacing in seconds (dt_mode —
+        the store knows the actual cadence; NULL for a single point).
+        point_fx and olson_tz_id come from ``catalog``
+        (Domain.measurements, keyed by store_id), broadcast-joined;
+        NULL when no catalog is given. Both aggregates hash-partition
+        by series, so the join plans without an extra exchange.
         """
         from my_weather_spark.ops.timeseries import dt_mode
 
-        if fast:
-            if not self._catalog_exists() or not self._catalog_is_v2():
-                # pre-sidecar or pre-v2 store: one-time migration scan
-                self.rebuild_catalog()
-            cat_df = self.spark.read.schema(self._catalog_schema()).parquet(
-                self._catalog_path
-            )
-            if source is not None:
-                cat_df = cat_df.where(F.col("source") == source)
-            if pattern is not None:
-                cat_df = cat_df.where(F.col("series_id").rlike(pattern))
-            if exact_fallback:
-                # Pin ONE call-time catalog snapshot (r8 ADVICE): the
-                # needs_scan existence probe below runs a job NOW, but
-                # the returned DataFrame is lazy — without this pin a
-                # store() between find() and execution would re-read
-                # the catalog with the plan shape already frozen, and a
-                # newly interleaved/capped series would silently get
-                # NULL delta_t despite the exact-equal guarantee.
-                # Checkpointing the (filtered, tiny) catalog makes the
-                # probe decision and the executed plan read the same
-                # state; the probe job was already being paid, so this
-                # adds no extra scan. Checkpoint blocks stay pinned in
-                # executor storage until the Python-side DataFrame is
-                # garbage collected — a long-lived driver calling
-                # find() in a loop accumulates pinned (catalog-sized,
-                # i.e. tiny) blocks until its references drop; callers
-                # holding many results can del them or gc.collect() to
-                # release (r9 ADVICE). The exact_fallback=False path
-                # stays fully lazy/zero-job by design (metadata-only
-                # callers; NULL delta_t there is the documented answer
-                # for unanswerable series either way).
-                cat_df = cat_df.localCheckpoint(eager=True)
-            # order a series' partition rows by period start: when they
-            # don't interleave, the full ts-sorted point sequence is
-            # exactly their concatenation, so total spacings = stored
-            # within-partition histograms + one boundary gap per
-            # consecutive row pair (next min_ts - prev max_ts)
-            worder = W.partitionBy("series_id").orderBy(
-                "data_period_start", "data_period_end", "source", "date"
-            )
-            r = cat_df.withColumn(
-                "_bgap",
-                F.unix_micros("data_period_start")
-                - F.unix_micros(F.lag("data_period_end").over(worder)),
-            )
-            # aggregate by series only (a series stored under several
-            # sources merges, exactly like the exact path's groupBy)
-            base = r.groupBy(F.col("series_id").alias("name")).agg(
-                F.min("data_period_start").alias("data_period_start"),
-                F.max("data_period_end").alias("data_period_end"),
-                F.min("created").alias("created"),
-                F.max("modified").alias("modified"),
-                F.sum("n_points").cast("long").alias("n_points"),
-                # series the sidecar cannot answer exactly: partitions
-                # interleave in time (concatenation order is not ts
-                # order), or a partition overflowed DT_HIST_CAP
-                # (histogram dropped) — routed to the pruned exact
-                # scan (exact_fallback) or to NULL delta_t
-                F.max(
-                    (F.col("_bgap") < 0)
-                    | (F.col("n_spacings") > self.DT_HIST_CAP)
-                ).alias("_needs_scan"),
-            )
-            within = r.select(
-                "series_id", F.explode("dt_hist").alias("_gap", "_n")
-            )
-            bounds = r.where(F.col("_bgap") >= 0).select(
-                "series_id",
-                F.col("_bgap").alias("_gap"),
-                F.lit(1).cast("long").alias("_n"),
-            )
-            wmode = W.partitionBy("series_id").orderBy(
-                F.desc("_cnt"), F.asc("_gap")
-            )
-            modes = (
-                within.unionByName(bounds)
-                .groupBy("series_id", "_gap")
-                .agg(F.sum("_n").alias("_cnt"))
-                .withColumn("_rn", F.row_number().over(wmode))
-                .where(F.col("_rn") == 1)
-                .select(
-                    F.col("series_id").alias("name"),
-                    # exact-path delta_t is dt_mode_seconds: micros/1e6
-                    (F.col("_gap") / F.lit(1_000_000.0))
-                    .cast("double")
-                    .alias("_dt"),
-                )
-            )
-            info = base.join(modes, "name", "left")
-            # Existence probe FIRST (one O(catalog) job): the common
-            # store has no interleaved/capped series, and the pure
-            # metadata path must then stay scan-free — without this
-            # guard the fallback subtree would still list the data
-            # root's files at planning time on every find(fast).
-            needs_scan = exact_fallback and (
-                base.where(F.col("_needs_scan")).limit(1).count() > 0
-            )
-            if needs_scan:
-                # recompute delta_t for JUST the series the sidecar
-                # can't answer: scan pruned to their (source, date)
-                # partitions — the partition list is O(fallback
-                # series' partitions) and broadcast, so dynamic
-                # partition pruning keeps reads proportional to the
-                # fallback subset, not the store. The series
-                # semi-join is corpus-derived (left to AQE).
-                # BOUNDARY: the pruning needs the hive layout this
-                # store writes (partitionBy source/date). On a
-                # legacy flat layout (pre-migration) the semi-join
-                # still filters CORRECTLY but prunes no files — run
-                # rebuild_catalog()/migration first if fast-path scan
-                # cost matters there.
-                fb = base.where(F.col("_needs_scan")).select(
-                    F.col("name").alias("series_id")
-                )
-                fb_parts = (
-                    r.join(fb, "series_id", "left_semi")
-                    .select(*PARTITION_COLS)
-                    .distinct()
-                )
-                fb_data = (
-                    self._read_all()
-                    .join(F.broadcast(fb_parts), PARTITION_COLS, "left_semi")
-                    .join(fb, "series_id", "left_semi")
-                )
-                exact_modes = dt_mode(fb_data).select(
-                    F.col("series_id").alias("name"),
-                    F.col("dt_mode_seconds").alias("_dt_exact"),
-                )
-                info = info.join(exact_modes, "name", "left")
-            else:
-                info = info.withColumn(
-                    "_dt_exact", F.lit(None).cast("double")
-                )
-            info = info.select(
-                "name",
-                "data_period_start",
-                "data_period_end",
-                "created",
-                "modified",
-                "n_points",
-                F.when(
-                    F.coalesce(F.col("_needs_scan"), F.lit(False)),
-                    F.col("_dt_exact"),
-                )
-                .otherwise(F.col("_dt"))
-                .alias("delta_t"),
-            )
-        else:
-            df = self._read_all()
-            if source is not None:
-                df = df.where(F.col("source") == source)
-            if pattern is not None:
-                df = df.where(F.col("series_id").rlike(pattern))
-            base = df.groupBy(F.col("series_id").alias("name")).agg(
-                F.min("ts").alias("data_period_start"),
-                F.max("ts").alias("data_period_end"),
-                F.count("value").alias("n_points"),
-                F.min("ingest_time").alias("created"),
-                F.max("ingest_time").alias("modified"),
-            )
-            deltas = dt_mode(df).select(
-                F.col("series_id").alias("name"),
-                F.col("dt_mode_seconds").alias("delta_t"),
-            )
-            info = base.join(deltas, "name", "left")
+        df = self._read_all()
+        if source is not None:
+            df = df.where(F.col("source") == source)
+        if pattern is not None:
+            df = df.where(F.col("series_id").rlike(pattern))
+        base = df.groupBy(F.col("series_id").alias("name")).agg(
+            F.min("ts").alias("data_period_start"),
+            F.max("ts").alias("data_period_end"),
+            F.count("value").alias("n_points"),
+            F.min("ingest_time").alias("created"),
+            F.max("ingest_time").alias("modified"),
+        )
+        deltas = dt_mode(df).select(
+            F.col("series_id").alias("name"),
+            F.col("dt_mode_seconds").alias("delta_t"),
+        )
+        info = base.join(deltas, "name", "left")
         if catalog is not None:
             cat = catalog.select(
                 F.col("store_id").alias("name"),

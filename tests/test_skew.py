@@ -166,13 +166,24 @@ def test_grouped_prefix_sum_matches_window(spark):
     from my_weather_spark.ops import ranking
 
     rng = random.Random(11)
-    rows = [
-        (i, rng.choice(["a", "b", "c"]), rng.randrange(-50, 50))
-        for i in range(1201)
-    ]
+    rows, n_seen = [], {}
+    for i in range(1201):
+        g = rng.choice(["a", "b", "c", "z"] if i % 60 == 0 else ["a", "b", "c"])
+        k = n_seen[g] = n_seen.get(g, -1) + 1
+        v = rng.randrange(-50, 50)
+        if g == "z" or (g == "a" and (k < 40 or k % 23)):
+            # z: no value ever (NULL throughout); a: leading NULL run
+            # across several Arrow batches, then a value every 23rd row
+            # so batch and partition boundaries land on NULL rows
+            v = None
+        elif g == "b" and (k == 0 or rng.random() < 0.1):
+            v = None  # leading and scattered middle NULLs
+        rows.append((i, g, v))
     df = spark.createDataFrame(rows, "id long, g string, v long")
     # tiny Arrow batches force the per-partition carry across batch
     # boundaries; few partitions force groups to span partitions.
+    # NULL values are skipped, and a group's sum is NULL until its
+    # first value, exactly as the window computes it.
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "16")
     try:
         got = ranking.grouped_prefix_sum(
